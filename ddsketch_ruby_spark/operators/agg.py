@@ -6,10 +6,11 @@ by batch, so executor memory is O(groups x state), never O(rows). Only the
 needed columns are selected first, so Catalyst prunes the parquet scan down
 to the value/group columns (checked via .explain ReadSchema in tests).
 
-Phase 2 (merge): ``groupBy(group).applyInPandas`` merges the per-partition
-partials. Shuffle volume is ``n_partitions x n_groups x state_size`` — for
-DDSketch at the default bin_limit that is <= ~32 kB per partial
-(reference base_sketch.rb:24-28 rationale) — independent of input row count,
+Phase 2 (merge): ``sketch_finalize`` merges the per-partition partials
+with ``groupBy(group).applyInPandas``. Shuffle volume is
+``n_partitions x n_groups x state_size`` — for DDSketch at the default
+bin_limit that is <= ~32 kB per partial (reference base_sketch.rb:24-28
+rationale) — independent of input row count,
 which is what makes the plan survive a 100x scale-up: the scan scales out,
 the shuffle stays tiny.
 
@@ -20,6 +21,12 @@ groups), ``tree_fanin`` inserts an intermediate salted merge round
 fan-in. Legality comes from merge associativity/commutativity (verified in
 tests/test_sketch.py::test_merge_associativity_commutativity).
 
+``sketch_finalize`` is the single per-group fold of the package: sketch_agg,
+its tree_fanin round, resumable builds (plans/lineage.py), rollups
+(operators/rollup.py) and JVM histogram assembly (operators/ddsketch_jvm.py)
+all go through its ``_per_group`` helper, which owns the output check, the
+output schema, the no-group constant key and the row emit.
+
 Skew note: a hot group key does NOT skew phase 2 — after phase 1 every
 group has exactly <= n_partitions partials regardless of how many raw rows
 it had. Raw-value skew is absorbed in phase 1, which is per-partition and
@@ -28,11 +35,10 @@ shuffle-free.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -116,6 +122,39 @@ def sketch_partials(
     return src.mapInPandas(fn, schema=schema)
 
 
+def _per_group(
+    df: DataFrame,
+    spec: SketchSpec,
+    group_by: list[str],
+    output: str,
+    fold: Callable[[SketchSpec, pd.DataFrame], object],
+) -> DataFrame:
+    """The one per-group fold: ``fold(spec, rows)`` turns each group's rows
+    into one sketch state, emitted as a state or result row. Every batch
+    sketch answer (sketch_agg, finalize of persisted states, rollups, JVM
+    histogram assembly) ends here."""
+    if output == "state":
+        fields, emit = spec.state_fields(), spec.state_to_row
+    elif output == "result":
+        fields, emit = spec.result_fields(), spec.result
+    else:
+        raise ValueError("output must be 'result' or 'state'")
+    out_schema = T.StructType(_group_fields(df, group_by) + fields)
+
+    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        row = {g: pdf[g].iloc[0] for g in group_by}
+        row.update(emit(fold(spec, pdf)))
+        return pd.DataFrame([row], columns=out_schema.names)
+
+    if group_by:
+        return df.groupBy(*group_by).applyInPandas(per_group, schema=out_schema)
+    # global aggregate: single group via a constant key
+    return df.groupBy(F.lit(1).alias("__g")).applyInPandas(
+        lambda pdf: per_group(pdf.drop(columns=["__g"], errors="ignore")),
+        schema=out_schema,
+    )
+
+
 def sketch_agg(
     df: DataFrame,
     spec: SketchSpec,
@@ -133,61 +172,14 @@ def sketch_agg(
     """
     group_by = list(group_by)
     partials = sketch_partials(df, spec, value_col, group_by, weight_col)
-    state_schema = T.StructType(
-        _group_fields(df, group_by) + spec.state_fields()
-    )
-
     if tree_fanin:
-        salted_schema = T.StructType(
-            [T.StructField("__salt", T.IntegerType())] + list(state_schema.fields)
+        salted = partials.withColumn(
+            "__salt", (F.spark_partition_id() % F.lit(int(tree_fanin)))
         )
-
-        def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            merged = _merge_states(spec, pdf)
-            row = {"__salt": pdf["__salt"].iloc[0]}
-            for g in group_by:
-                row[g] = pdf[g].iloc[0]
-            row.update(spec.state_to_row(merged))
-            return pd.DataFrame([row], columns=salted_schema.names)
-
-        partials = (
-            partials.withColumn(
-                "__salt", (F.spark_partition_id() % F.lit(int(tree_fanin)))
-            )
-            .groupBy("__salt", *group_by)
-            .applyInPandas(merge_salted, schema=salted_schema)
-            .drop("__salt")
-        )
-
-    if output == "state":
-        out_schema = state_schema
-        emit = spec.state_to_row
-    elif output == "result":
-        out_schema = T.StructType(
-            _group_fields(df, group_by) + spec.result_fields()
-        )
-        emit = spec.result
-    else:
-        raise ValueError("output must be 'result' or 'state'")
-
-    def merge_final(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = _merge_states(spec, pdf)
-        row = {g: pdf[g].iloc[0] for g in group_by}
-        row.update(emit(merged))
-        return pd.DataFrame([row], columns=out_schema.names)
-
-    if group_by:
-        return partials.groupBy(*group_by).applyInPandas(
-            merge_final, schema=out_schema
-        )
-    # global aggregate: single group via a constant key
-    return (
-        partials.groupBy(F.lit(1).alias("__g"))
-        .applyInPandas(
-            lambda pdf: merge_final(pdf.drop(columns=["__g"], errors="ignore")),
-            schema=out_schema,
-        )
-    )
+        partials = sketch_finalize(
+            salted, spec, ["__salt", *group_by], "state"
+        ).drop("__salt")
+    return sketch_finalize(partials, spec, group_by, output)
 
 
 def sketch_finalize(
@@ -206,28 +198,4 @@ def sketch_finalize(
     group_by = list(group_by)
     state_names = [f.name for f in spec.state_fields()]
     src = df.select(*group_by, *state_names)
-    if output == "state":
-        out_schema = T.StructType(
-            _group_fields(src, group_by) + spec.state_fields()
-        )
-        emit = spec.state_to_row
-    elif output == "result":
-        out_schema = T.StructType(
-            _group_fields(src, group_by) + spec.result_fields()
-        )
-        emit = spec.result
-    else:
-        raise ValueError("output must be 'result' or 'state'")
-
-    def fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = _merge_states(spec, pdf)
-        row = {g: pdf[g].iloc[0] for g in group_by}
-        row.update(emit(merged))
-        return pd.DataFrame([row], columns=out_schema.names)
-
-    if group_by:
-        return src.groupBy(*group_by).applyInPandas(fin, schema=out_schema)
-    return src.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: fin(pdf.drop(columns=["__g"], errors="ignore")),
-        schema=out_schema,
-    )
+    return _per_group(src, spec, group_by, output, _merge_states)

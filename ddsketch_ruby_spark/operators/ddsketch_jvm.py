@@ -41,16 +41,16 @@ tests/test_spark_ddsketch.py — and a DuckDB oracle can replicate them.
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from typing import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..kernel import DDSketch
 from ..sketches.ddsketch_spec import DDSketchSpec
+from .agg import _per_group
 
 __all__ = ["ddsketch_jvm_agg", "key_column", "histogram_rows", "assemble_histogram"]
 
@@ -102,37 +102,6 @@ def key_column(mapping, v):
     return (raw.cast("double") + F.lit(float(mapping.offset))).cast("long")
 
 
-def _histogram(
-    df: DataFrame,
-    spec: DDSketchSpec,
-    value_col: str,
-    group_by: list[str],
-    weight_col: str | None,
-) -> DataFrame:
-    mapping = spec.zero().mapping
-    mp = mapping.min_possible
-
-    v = F.col(value_col).cast("double")
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    src = df.where(v.isNotNull() & ~F.isnan(v))
-    zone = (
-        F.when(v > F.lit(mp), F.lit(1))
-        .when(v < F.lit(-mp), F.lit(-1))
-        .otherwise(F.lit(0))
-    )
-    key = F.when(zone == 0, F.lit(0).cast("long")).otherwise(
-        key_column(mapping, F.abs(v))
-    )
-    return src.groupBy(
-        *group_by, zone.alias("__zone"), key.alias("__key")
-    ).agg(
-        F.sum(w).alias("__cnt"),
-        F.sum(v * w).alias("__svw"),
-        F.min(v).alias("__minv"),
-        F.max(v).alias("__maxv"),
-    )
-
-
 def _assemble_state(spec: DDSketchSpec, pdf: pd.DataFrame) -> DDSketch:
     """(zone, key, cnt, svw, minv, maxv) rows -> kernel sketch state."""
     s = spec.zero()
@@ -163,7 +132,28 @@ def histogram_rows(
     __svw, __minv, __maxv) — the sketch's shuffle-time representation.
     Exposed so streaming queries can run the same JVM aggregation and
     assemble sketches downstream (streaming/sketch_stream.py)."""
-    return _histogram(df, spec, value_col, list(group_by), weight_col)
+    mapping = spec.zero().mapping
+    mp = mapping.min_possible
+
+    v = F.col(value_col).cast("double")
+    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+    src = df.where(v.isNotNull() & ~F.isnan(v))
+    zone = (
+        F.when(v > F.lit(mp), F.lit(1))
+        .when(v < F.lit(-mp), F.lit(-1))
+        .otherwise(F.lit(0))
+    )
+    key = F.when(zone == 0, F.lit(0).cast("long")).otherwise(
+        key_column(mapping, F.abs(v))
+    )
+    return src.groupBy(
+        *group_by, zone.alias("__zone"), key.alias("__key")
+    ).agg(
+        F.sum(w).alias("__cnt"),
+        F.sum(v * w).alias("__svw"),
+        F.min(v).alias("__minv"),
+        F.max(v).alias("__maxv"),
+    )
 
 
 def assemble_histogram(
@@ -175,30 +165,7 @@ def assemble_histogram(
     """Fold histogram_rows output into one sketch row per group. Correct
     over PARTIAL histograms too (duplicate (group, zone, key) rows just
     re-merge — bucket addition is the monoid op)."""
-    group_by = list(group_by)
-    by_name = {f.name: f for f in hist.schema.fields}
-    group_fields = [by_name[g] for g in group_by]
-    if output == "state":
-        out_schema = T.StructType(group_fields + spec.state_fields())
-        emit = spec.state_to_row
-    elif output == "result":
-        out_schema = T.StructType(group_fields + spec.result_fields())
-        emit = spec.result
-    else:
-        raise ValueError("output must be 'result' or 'state'")
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = _assemble_state(spec, pdf)
-        row: dict[str, Any] = {g: pdf[g].iloc[0] for g in group_by}
-        row.update(emit(state))
-        return pd.DataFrame([row], columns=out_schema.names)
-
-    if group_by:
-        return hist.groupBy(*group_by).applyInPandas(assemble, schema=out_schema)
-    return hist.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        lambda pdf: assemble(pdf.drop(columns=["__g"], errors="ignore")),
-        schema=out_schema,
-    )
+    return _per_group(hist, spec, list(group_by), output, _assemble_state)
 
 
 def ddsketch_jvm_agg(
@@ -212,5 +179,5 @@ def ddsketch_jvm_agg(
     """JVM-histogram DDSketch aggregation; same output contract as
     operators.agg.sketch_agg with a DDSketchSpec."""
     group_by = list(group_by)
-    hist = _histogram(df, spec, value_col, group_by, weight_col)
+    hist = histogram_rows(df, spec, value_col, group_by, weight_col)
     return assemble_histogram(hist, spec, group_by, output)

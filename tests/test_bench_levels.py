@@ -8,7 +8,11 @@ recorded efficiency numbers, so pin them.
 
 import pytest
 
-from scripts.webcorpus_scaling_bench import _max_partition_bytes, spec_cores
+from scripts.webcorpus_scaling_bench import (
+    _max_partition_bytes,
+    scaling_levels,
+    spec_cores,
+)
 
 
 def test_spec_cores_forms():
@@ -42,3 +46,20 @@ def test_max_partition_bytes_targets_waves(tmp_path):
         2_000_000_000 // 96
     )
     assert total  # silence unused warning-style lint
+
+
+def test_scaling_levels_headline_is_worst_top_core_level():
+    levels = ("local-cluster[1,2,4096]", "8", "local-cluster[4,2,4096]")
+    rate = {levels[0]: 100.0, "8": 300.0, levels[2]: 380.0}
+    lo, hi, eff = scaling_levels(levels, rate)
+    assert lo == levels[0]
+    # both 8-core levels tie on cores: the headline is the WORSE one
+    assert hi == "8"
+    assert eff(hi) == pytest.approx(0.75)
+    assert eff(levels[2]) == pytest.approx(0.95)
+    assert eff(lo) == pytest.approx(1.0)
+    # order of the level list does not matter
+    assert scaling_levels(levels[::-1], rate)[:2] == (lo, hi)
+    lo, hi, eff = scaling_levels(("2", "8"), {"2": 50.0, "8": 180.0})
+    assert (lo, hi) == ("2", "8")
+    assert eff(hi) == pytest.approx(0.9)

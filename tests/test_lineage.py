@@ -144,3 +144,19 @@ def test_no_second_input_scan_for_lineage_rows(spark, tmp_path, splits, monkeypa
         for p in glob.glob(str(tmp_path / "ck" / "lineage" / "*.json"))
     ][0]
     assert row["values_sketched"] > 0
+
+
+def test_result_rejects_unknown_output(spark, tmp_path, splits):
+    spec = DDSketchSpec(0.01)
+    b = CheckpointedSketchBuild(spark, spec, str(tmp_path / "ckpt_out"), "value")
+    b.run(splits[:1])
+    with pytest.raises(ValueError, match="output must be"):
+        b.result(output="bogus")
+
+
+def test_result_on_empty_checkpoint_names_the_dir(spark, tmp_path):
+    d = str(tmp_path / "ckpt_empty")
+    b = CheckpointedSketchBuild(spark, DDSketchSpec(0.01), d, "value")
+    with pytest.raises(ValueError, match="no split has completed") as exc_info:
+        b.result()
+    assert d in str(exc_info.value)

@@ -11,6 +11,9 @@ condition, which plans as BroadcastNestedLoopJoin — allowed only for
 them.
 """
 
+import ast
+import pathlib
+
 import pytest
 
 import __spark_entry__ as entry
@@ -55,3 +58,24 @@ def test_no_per_row_python_and_no_cartesian(spark, name):
         assert "BroadcastNestedLoopJoin" not in plan, (
             f"{name}: unexpected nested-loop join"
         )
+
+
+def test_one_per_group_fold():
+    """Per-group sketch folds go through operators/agg.py's ``_per_group``:
+    any other ``.applyInPandas(`` call in the package is a copy of it.
+    ``applyInPandasWithState`` (streaming) is a different method and is
+    not matched."""
+    pkg = pathlib.Path(entry.__file__).parent / "ddsketch_ruby_spark"
+    callers = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "applyInPandas"
+                ):
+                    name = getattr(top, "name", "<module>")
+                    callers.add((path.relative_to(pkg).as_posix(), name))
+    assert callers == {("operators/agg.py", "_per_group")}

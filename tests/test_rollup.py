@@ -1,10 +1,12 @@
 """Rollup over sketch states: folding finest-grain states upward must equal
 rebuilding from raw data at each level (monoid exactness)."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from ddsketch_ruby_spark.operators.agg import sketch_finalize
 from ddsketch_ruby_spark.operators.quantiles import ddsketch_quantiles, ddsketch_state
-from ddsketch_ruby_spark.operators.rollup import merge_states, sketch_cube_union
+from ddsketch_ruby_spark.operators.rollup import sketch_cube_union, sketch_rollup
 from ddsketch_ruby_spark.sketches.ddsketch_spec import DDSketchSpec
 
 
@@ -16,7 +18,7 @@ def test_rollup_equals_direct_build(spark, sf_dir):
     # fold states (lang, source) -> (lang)
     rolled = {
         r["lang"]: r.asDict()
-        for r in merge_states(fine, spec, ["lang"], output="result").collect()
+        for r in sketch_finalize(fine, spec, ["lang"], output="result").collect()
     }
     direct = {
         r["lang"]: r.asDict()
@@ -32,7 +34,7 @@ def test_rollup_equals_direct_build(spark, sf_dir):
         assert rolled[lang]["max"] == direct[lang]["max"]
 
     # fold all the way to the global sketch
-    total = merge_states(fine, spec, [], output="result").collect()[0].asDict()
+    total = sketch_finalize(fine, spec, [], output="result").collect()[0].asDict()
     n = docs.count()
     assert total["count"] == n
 
@@ -40,15 +42,13 @@ def test_rollup_equals_direct_build(spark, sf_dir):
 def test_cross_job_gamma_guard(spark, sf_dir):
     """States persisted at one alpha must refuse to fold under another —
     the reference's InvalidSketchMergeError carried across jobs."""
-    import pytest
-
     from ddsketch_ruby_spark.kernel import InvalidSketchMergeError
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fine = ddsketch_state(docs, "n_chars", ["lang"], relative_accuracy=0.01)
     wrong_spec = DDSketchSpec(0.05)
     with pytest.raises(Exception) as exc_info:
-        merge_states(fine, wrong_spec, [], output="result").collect()
+        sketch_finalize(fine, wrong_spec, [], output="result").collect()
     assert "different relative accuracy" in str(exc_info.value)
 
 
@@ -65,3 +65,13 @@ def test_cube_union_shape(spark, sf_dir):
     global_row = [r for r in rows if r["lang"] is None and r["source"] is None]
     assert len(global_row) == 1
     assert global_row[0]["count"] == docs.count()
+
+
+def test_unknown_output_raises(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    spec = DDSketchSpec(0.01)
+    fine = ddsketch_state(docs, "n_chars", ["lang"])
+    with pytest.raises(ValueError, match="output must be"):
+        sketch_finalize(fine, spec, ["lang"], output="bogus")
+    with pytest.raises(ValueError, match="output must be"):
+        sketch_rollup(fine, spec, ["lang"], output="bogus")
